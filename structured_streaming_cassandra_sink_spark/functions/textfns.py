@@ -21,9 +21,3 @@ def fingerprint(col: Column) -> Column:
     murmur/xxhash which are implementation-detail), so exact-dedup results
     are portable and oracle-checkable."""
     return F.md5(F.lower(F.regexp_replace(col, r"\s+", " ")))
-
-
-def seeded_hash64(col: Column, seed: int) -> Column:
-    """One of a family of 64-bit hash functions, derived by salting
-    xxhash64 — the MinHash permutation family."""
-    return F.xxhash64(F.concat(F.lit(f"s{seed}:"), col))

@@ -10,7 +10,7 @@ count = training-job reader count.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -45,7 +45,3 @@ def write_training_shards(
         .mode("overwrite")
         .parquet(path)
     )
-
-
-def read_shard(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)

@@ -13,11 +13,19 @@ Backends:
 - ``parquet_upsert_sink`` — local twin with the SAME upsert-by-key end
   state as the reference's Cassandra PK table (:71-79): MERGE emulated as
   read-existing + union + latest-per-key + atomic swap.
+- ``manifest_merge_sink`` — the same merge, committed through a
+  transaction log instead of a rename swap.
 - ``parquet_append_sink`` — plain append (for append-semantics queries).
 - ``cassandra_upsert_sink`` — production path via the Spark Cassandra
   Connector (DataSourceV2); Cassandra writes are natively upserts, so the
   batch `.save()` IS the merge. Gated: the connector jar isn't in this
   environment.
+
+Both local upsert sinks merge through :func:`upsert_merger`: one
+``latest_per_key(existing ∪ batch)`` per epoch, i.e. ONE hash shuffle on
+the key (duplicate keys inside the batch resolve in the same window as
+the table's rows), with the state's parquet schema known — it is
+inferred only when a sink instance first reads a table it did not write.
 """
 
 from __future__ import annotations
@@ -52,6 +60,43 @@ def parquet_epoch_append_sink(path: str):
         df.write.mode("overwrite").parquet(f"{path}/epoch={epoch_id}")
 
     return write
+
+
+def upsert_merger(key: str, order: list[str]):
+    """The upsert merge both upsert sinks share: ``merge(batch, state_dir)``
+    returns the new state, the latest row per ``key`` (by ``order``) over
+    the rows of the parquet table at ``state_dir`` and the batch
+    (``state_dir=None``: no table yet, the batch alone).
+
+    One window over ``existing ∪ batch`` — ONE hash shuffle on ``key``.
+    Deduplicating the batch first would add a second shuffle and window
+    without changing the answer: the batch's own duplicate keys meet in
+    the same window as the table's rows.
+
+    The schema of each returned state (what the sink writes) is kept and
+    handed to ``spark.read.schema`` on the next epoch, which spares every
+    epoch a footer-reading inference job; only the first read of a table
+    this merger did not write (a restart, a seeded table) infers it. The
+    kept schema is the merged one, not the one read, so a batch column
+    that widens the table's type (int -> bigint) is read back as written."""
+    from ..plans.flagship import latest_per_key
+
+    schema = None
+
+    def merge(batch: DataFrame, state_dir: str | None) -> DataFrame:
+        nonlocal schema
+        if state_dir is None:
+            merged = latest_per_key(batch, key, order)
+        else:
+            reader = batch.sparkSession.read
+            existing = (reader if schema is None else reader.schema(schema)).parquet(state_dir)
+            merged = latest_per_key(
+                existing.unionByName(batch.select(*existing.columns)), key, order
+            )
+        schema = merged.schema
+        return merged
+
+    return merge
 
 
 def _upsert_state_complete(d: str) -> bool:
@@ -98,22 +143,17 @@ def parquet_upsert_sink(path: str, key: str, order: list[str]):
     rename swap could drop ALL prior state if the process died between
     the two calls).
 
+    Per epoch the merge is one shuffle with the state's schema known (see
+    :func:`upsert_merger`).
+
     Scale note: at 100 TB this becomes Delta/Iceberg MERGE INTO or the
     Cassandra connector below — the read-union-rewrite here is the
     jar-free local twin, not the production plan."""
-    from ..plans.flagship import latest_per_key
+    merge = upsert_merger(key, order)
 
     def write(df: DataFrame, epoch_id: int) -> None:
-        spark = df.sparkSession
         _recover_upsert_dir(path)
-        batch = latest_per_key(df, key, order)
-        if os.path.isdir(path):
-            existing = spark.read.parquet(path)
-            merged = latest_per_key(
-                existing.unionByName(batch.select(*existing.columns)), key, order
-            )
-        else:
-            merged = batch
+        merged = merge(df, path if os.path.isdir(path) else None)
         nxt, old = path + "__next", path + "__old"
         merged.write.mode("overwrite").parquet(nxt)
         if os.path.isdir(path):
@@ -271,22 +311,14 @@ def manifest_merge_sink(path: str, key: str, order: list[str], retain: int | Non
     commit."""
     import json
 
-    from ..plans.flagship import latest_per_key
+    merge = upsert_merger(key, order)
 
     def write(df: DataFrame, epoch_id: int) -> None:
-        spark = df.sparkSession
         m = _manifest_latest(path)
         if m is not None and int(m["epoch_id"]) == int(epoch_id):
             return  # replayed epoch already fully committed
         version = 0 if m is None else int(m["version"]) + 1
-        batch = latest_per_key(df, key, order)
-        if m is not None:
-            existing = spark.read.parquet(os.path.join(path, m["data_dir"]))
-            merged = latest_per_key(
-                existing.unionByName(batch.select(*existing.columns)), key, order
-            )
-        else:
-            merged = batch
+        merged = merge(df, None if m is None else os.path.join(path, m["data_dir"]))
         data_dir = os.path.join("data", f"v{version}-e{epoch_id}")
         merged.write.mode("overwrite").parquet(os.path.join(path, data_dir))
         log = _manifest_log_dir(path)

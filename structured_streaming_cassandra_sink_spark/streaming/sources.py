@@ -63,11 +63,19 @@ def file_message_stream(
 ) -> DataFrame:
     """Test mirror: parquet files each holding `value: string` messages
     (possibly multi-record, '\\n'-joined). maxFilesPerTrigger=1 makes each
-    file one micro-batch — deterministic replay of the Kafka cadence."""
+    file one micro-batch — deterministic replay of the Kafka cadence.
+
+    One message file is one input partition, so without help every
+    micro-batch would parse and transform on a single task. The messages
+    are spread round-robin over ``defaultParallelism`` partitions first,
+    so the parse chain (the per-row JSON work) runs on every core; the
+    shuffle moves only the raw message strings. ``kafka_stream`` needs no
+    such step: its topic partitions already set its parallelism."""
     return (
         spark.readStream.schema(VALUE_ONLY)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(path)
+        .repartition(spark.sparkContext.defaultParallelism)
     )
 
 

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from structured_streaming_cassandra_sink_spark.operators.dedup import (
@@ -46,6 +47,15 @@ def test_identical_docs_have_zero_hamming(spark):
     assert sk[1] != sk[3]
     pairs = {(r.doc_a, r.doc_b): r.hamming for r in simhash_pairs(docs).collect()}
     assert pairs.get((1, 2)) == 0
+
+
+def test_simhash_rejects_non_64_bits(spark):
+    """The two-word nibble parse is fixed at 64 bits: any other width is
+    refused when the sketch is built, before a plan exists."""
+    docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    for bits in (32, 128):
+        with pytest.raises(ValueError, match="64"):
+            simhash(docs, bits=bits)
 
 
 def test_exact_dedup_collapses_duplicates(spark):

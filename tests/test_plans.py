@@ -692,6 +692,56 @@ def test_simhash_single_shuffle_sketch(spark, sf_dir):
     assert "ArrowEvalPython" not in plan
 
 
+def test_file_message_stream_spreads_rows_round_robin(spark, tmp_path):
+    """One message file is one input partition: the file mirror must
+    spread each micro-batch round-robin over defaultParallelism
+    partitions (ONE exchange) so the parse chain runs on every core."""
+    from structured_streaming_cassandra_sink_spark.streaming.sources import (
+        file_message_stream,
+    )
+
+    src = str(tmp_path / "msgs")
+    spark.createDataFrame([(f"m{i}",) for i in range(64)], "value string").coalesce(
+        1
+    ).write.parquet(src)
+    n = spark.sparkContext.defaultParallelism
+    seen = []
+    q = (
+        file_message_stream(spark, src)
+        .writeStream.queryName("t_round_robin")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .foreachBatch(lambda df, _: seen.append((df.rdd.getNumPartitions(), df.count())))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        plan = q._jsq.explainInternal(False)  # the last micro-batch's plan
+    finally:
+        q.stop()
+    initial = plan.split("== Initial Plan ==")[-1]
+    assert re.findall(r"Exchange \S+", initial) == [
+        f"Exchange RoundRobinPartitioning({n}),"
+    ], plan
+    assert seen == [(n, 64)]
+
+
+def test_upsert_merge_single_shuffle(spark, tmp_path):
+    """The upsert sinks' merge is ONE window over (state ∪ batch): exactly
+    one hash exchange on the key, and no second window deduplicating the
+    batch first."""
+    from structured_streaming_cassandra_sink_spark.streaming.sinks import upsert_merger
+
+    state = str(tmp_path / "state")
+    spark.createDataFrame([(1, 10), (2, 20)], "k int, v int").write.parquet(state)
+    batch = spark.createDataFrame([(2, 25), (2, 24), (3, 30)], "k int, v int")
+    merge = upsert_merger("k", ["v"])
+    for _ in range(2):  # schema inferred, then schema given
+        plan = merge(batch, state)._jdf.queryExecution().executedPlan().toString()
+        assert len(re.findall(r"Exchange hashpartitioning\(k#", plan)) == 1, plan
+        assert len(re.findall(r"Exchange ", plan)) == 1, plan
+        assert len(re.findall(r"\bWindow \[", plan)) == 1, plan
+
+
 def test_plan_guard_artifact_current_and_clean(spark, sf_dir):
     """PLAN_GUARD.json (tools/plan_guard.py sweep of EVERY registered
     query's physical plan) must cover the whole registry and record zero

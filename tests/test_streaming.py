@@ -1049,6 +1049,68 @@ def test_manifest_merge_sink_crash_before_commit(spark, sf_dir, tmp_path):
     }
 
 
+def _upsert_sink_kind(spark, kind: str, path: str):
+    """(new sink instance factory, state reader) for one upsert sink."""
+    from structured_streaming_cassandra_sink_spark.streaming.sinks import (
+        manifest_merge_sink,
+        parquet_upsert_sink,
+        read_manifest_table,
+    )
+
+    if kind == "parquet":
+        return lambda: parquet_upsert_sink(path, "k", ["v", "tag"]), lambda: spark.read.parquet(path)
+    return lambda: manifest_merge_sink(path, "k", ["v", "tag"]), lambda: read_manifest_table(spark, path)
+
+
+@pytest.mark.parametrize("kind", ["parquet", "manifest"])
+def test_upsert_sinks_one_shuffle_merge_equivalence(spark, tmp_path, kind):
+    """Each upsert sink's state after every epoch == latest_per_key over
+    every row ever written, with the batch NOT deduplicated before the
+    merge: batches repeat keys within themselves, an epoch is replayed,
+    a fresh sink instance picks up a table it did not write (a restart,
+    and for the plain-parquet sink a seeded table: the paths that infer
+    the state's schema), and a batch widens a column's type (the kept
+    schema must follow what was written)."""
+    import random
+
+    rng = random.Random(11)
+    path = str(tmp_path / kind)
+    new_sink, read = _upsert_sink_kind(spark, kind, path)
+    written: list[tuple] = []
+
+    def batch(n: int) -> list[tuple]:
+        return [
+            (rng.randrange(12), rng.randrange(40), rng.choice("abcd")) for _ in range(n)
+        ]
+
+    def feed(sink, epoch: int, rows: list[tuple], ddl: str = "k int, v int, tag string"):
+        sink(spark.createDataFrame(rows, ddl), epoch)
+        written.extend(rows)
+        want = latest_per_key(
+            spark.createDataFrame(written, "k int, v bigint, tag string"), "k", ["v", "tag"]
+        )
+        got = sorted(tuple(r) for r in read().select("k", "v", "tag").collect())
+        assert got == sorted(tuple(r) for r in want.collect()), (kind, epoch)
+
+    if kind == "parquet":  # a seeded table: plain parquet no sink wrote
+        seed = batch(30)
+        latest_per_key(
+            spark.createDataFrame(seed, "k int, v int, tag string"), "k", ["v", "tag"]
+        ).write.parquet(path)
+        written.extend(seed)
+    sink = new_sink()
+    epoch_rows = {}
+    for epoch in range(4):
+        epoch_rows[epoch] = batch(30)
+        assert len({r[0] for r in epoch_rows[epoch]}) < 30  # in-batch duplicates
+        feed(sink, epoch, epoch_rows[epoch])
+    feed(sink, 3, epoch_rows[3])  # replayed epoch: same rows, same id
+    restarted = new_sink()  # restart: first read infers the schema
+    feed(restarted, 4, batch(30))
+    feed(restarted, 5, [(k, v + 2**40, t) for k, v, t in batch(5)], "k int, v bigint, tag string")
+    feed(restarted, 6, batch(30))
+
+
 @pytest.fixture(scope="module")
 def timesliced_message_dir(spark, sf_dir, tmp_path_factory):
     """Messages split into 4 files of CONTIGUOUS (ts, event_id) ranges,
